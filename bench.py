@@ -480,7 +480,10 @@ def main() -> None:
     # came up empty because the 8-core scaling run OVERWROTE the 32-core
     # per-query detail.  Additions-only: same content, one extra file.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    detail["cpus"] = int(cpus)
+    try:
+        detail["cpus"] = int(cpus)
+    except ValueError:  # a malformed value must not cost the stdout line
+        detail["cpus"] = cpus
     here = os.path.dirname(os.path.abspath(__file__))
     for fname in (
         "BENCH_DETAIL.json",

@@ -17,6 +17,8 @@ suite gates that.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -36,13 +38,18 @@ def _ddl_field_names(schema: str) -> list[str]:
     return names
 
 
-# probe memo for fan_out: {(session id, plan semanticHash): n_parts}.
+# probe memo for fan_out: {session: {plan semanticHash: n_parts}}.
 # Plan METADATA only — never data or results; the same logical plan in
-# the same session always scans the same files the same way, so the
-# expensive .rdd physical-planning probe (measured 31-55 ms per call,
-# paid once per fan_out site per bench rep) runs once per distinct
-# plan.  Entries die with the process.
-_FAN_PARTS: dict[tuple, int] = {}
+# the same session scans the same files the same way, so the expensive
+# .rdd physical-planning probe (measured 31-55 ms per call, paid once
+# per fan_out site per bench rep) runs once per distinct plan.  Keyed
+# weakly on the session object, so a session's entries die with it: an
+# id() key could be reused by a later session and serve its stale
+# counts.  A plan whose files change mid-session keeps its first count
+# (perf only: a missed or gratuitous repartition, never other rows).
+_FAN_PARTS: weakref.WeakKeyDictionary[SparkSession, dict[int, int]] = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -53,17 +60,18 @@ def fan_out(df: DataFrame) -> DataFrame:
     tokenize+explode passes, md5 hashing, Arrow UDFs) runs as ONE task
     on a many-core box.  No-op on an already-parallel scan, so a 100 TB
     input never pays a gratuitous shuffle.  The partition-count probe
-    is memoized per (session, plan semanticHash) — semanticHash is an
+    is memoized per session and plan semanticHash — semanticHash is an
     analysis-only call (~free next to the probe's physical planning;
     the round-11 VERDICT flagged the per-call probe as a driver cost
     on the 100 TB path)."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    key = (id(spark), df.semanticHash())
-    n = _FAN_PARTS.get(key)
+    memo = _FAN_PARTS.setdefault(spark, {})
+    key = df.semanticHash()
+    n = memo.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()
-        _FAN_PARTS[key] = n
+        memo[key] = n
     if n < par:
         return df.repartition(par)
     return df
