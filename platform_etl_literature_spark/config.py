@@ -30,10 +30,17 @@ DEFAULT_SECTION_RANKS: list[SectionRank] = [
 @dataclass(frozen=True)
 class Word2VecConfig:
     """embedding.model-configuration (reference.conf:84-90) + an
-    explicit seed for test reproducibility (SURVEY.md §7.5)."""
+    explicit seed (SURVEY.md §7.5).
+
+    The seed alone does not make the vectors reproducible: with
+    ``num_partitions`` above 1, training tasks that run at the same time
+    update shared vectors, so vectors, and the evidence built on them,
+    depend on scheduling.  The default of 1 gives equal vectors from
+    equal training sets; the reference's 16 stays selectable for
+    clusters where parallel training pays."""
 
     window_size: int = 10
-    num_partitions: int = 16
+    num_partitions: int = 1
     max_iter: int = 3
     min_count: int = 1
     step_size: float = 0.02

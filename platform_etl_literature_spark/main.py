@@ -76,6 +76,22 @@ def _out(cfg: dict, name: str, df) -> dict[str, IOResource]:
 
 
 def run_all(spark: SparkSession, cfg: dict, steps: list[str]) -> None:
+    """Run ``steps`` in order, each writing its configured outputs.
+
+    What the steps persist (grounding's mapped labels, the matches and
+    co-occurrences, the Word2Vec training set) serves only their own
+    writes, so the session's cache is cleared once the steps finish:
+    no persisted block outlives the call.  Production runs each step
+    in its own session; a caller that shares the session loses its own
+    cached frames too (they recompute on next use).
+    """
+    try:
+        _run_steps(spark, cfg, steps)
+    finally:
+        spark.catalog.clearCache()
+
+
+def _run_steps(spark: SparkSession, cfg: dict, steps: list[str]) -> None:
     inputs = read_from(spark, _io_configs(cfg["inputs"]))
     out_fmt = cfg["output"]["format"]
     out_dir = cfg["output"]["dir"]

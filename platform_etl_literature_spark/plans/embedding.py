@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.ml.feature import Word2Vec, Word2VecModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from platform_etl_literature_spark.config import SectionRank, Word2VecConfig
 from platform_etl_literature_spark.plans.processing import section_rank_table
@@ -35,16 +34,21 @@ def regroup_matches(
     overall per-pmid set (Embedding.regroupMatches:25-67).
 
     Output: (pmid, terms: array<string>) — one row per rank group and
-    one for the full publication.
+    one for the full publication, whose set concatenates the rank
+    groups in rank order.  Sets are sorted, so the rows do not depend on
+    the order in which mentions arrive.
     """
     rank_table = F.broadcast(section_rank_table(spark, ranks))
-    w_per_section = Window.partitionBy("pmid", "rank")
     return (
         df.join(rank_table, ["section"])
-        .withColumn("keys", F.collect_set("keywordId").over(w_per_section))
-        .dropDuplicates(["pmid", "rank"])
+        .groupBy("pmid", "rank")
+        .agg(F.array_sort(F.collect_set("keywordId")).alias("keys"))
         .groupBy("pmid")
-        .agg(F.collect_list("keys").alias("keys"))
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(rank, keys))), r -> r.keys)"
+            ).alias("keys")
+        )
         .withColumn("overall", F.flatten(F.col("keys")))
         .withColumn("all", F.concat(F.col("keys"), F.array(F.col("overall"))))
         .withColumn("terms", F.explode("all"))

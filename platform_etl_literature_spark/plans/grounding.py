@@ -16,7 +16,9 @@ Scale design: the LUT is broadcast (small dimension vs the corpus);
 every explode/normalize stage is map-side; the only shuffles are the
 grounding joins' build side exchange (none — broadcast), the window
 partitions in disambiguation (keyed by (pmid,pmcid,type,keyword) — high
-cardinality, no skew hot key), and the final dedups.  The
+cardinality, no skew hot key), the final dedups, and one exchange per
+valid stream that clusters it by publication for the writes (DESIGN.md,
+"Output layout").  The
 nested-field-space rename is pure-plan (positional struct cast), NOT an
 RDD round-trip as in the reference (Helpers.scala:166-175), so parquet
 pushdown and column pruning survive.
@@ -485,6 +487,14 @@ def resolve_entities(
         .selectExpr("*", "keywordId IS NOT NULL AS isMapped")
     )
 
+    # The disambiguated streams leave disambiguate() hash-partitioned by
+    # (type, keyword), so every output file would hold a scatter of
+    # publications, each repeating its sentence text, dates and ids.
+    # One more exchange clusters them by publication, which the
+    # compressed files repay (DESIGN.md, "Output layout"); the literature
+    # index casts pmid the same way and runs on this partitioning with
+    # no exchange of its own.  So a non-numeric pmid fails its ANSI cast
+    # here, at the matches write.
     valid_matches = (
         merged_matches.filter(F.col("isMapped"))
         .transform(lambda d: disambiguate(d, "keywordId", "uniqueKeywordIdsPerLabelN"))
@@ -493,6 +503,7 @@ def resolve_entities(
             "struct(endInSentence, label, labelN, sectionEnd, sectionStart,"
             " startInSentence, type, keywordId, isMapped) AS match",
         )
+        .repartition(F.expr("CAST(pmid AS BIGINT)"))
     )
 
     ml1 = mapped_labels.selectExpr(
@@ -553,6 +564,7 @@ def resolve_entities(
             " start1, start2, concat_ws('-', type1, type2) AS type,"
             " type1, type2, isMapped) AS `co-occurrence`",
         )
+        .repartition("pmid")
     )
 
     return {

@@ -81,28 +81,37 @@ def literature_index(
             for c in df.columns
         ]
     )
-    # ONE exchange for the whole index (guide §2.4): partitioning by
-    # pmid alone satisfies every downstream clustering requirement —
-    # both windows ((pmid, section, keywordId) and (pmid, keywordId)),
-    # both dropDuplicates, the sentences branch's two groupBys
-    # ((pmid, section) then (pmid)) and the final join on pmid — so the
-    # plan pays this single shuffle of the match stream instead of four
-    # (plans/r10/literature_pipeline_frozen_before.txt).  Rows per pmid
-    # are bounded by mentions per publication, so no skew hot key.
-    fdf = fdf.repartition("pmid")
-
+    # No exchange of its own: the match stream arrives hash-partitioned
+    # by CAST(pmid AS BIGINT) (grounding.resolve_entities), which is this
+    # projection's pmid, and partitioning by pmid alone satisfies both
+    # windows ((pmid, section, keywordId) and (pmid, keywordId)), both
+    # dropDuplicates, the sentences branch's two groupBys and the final
+    # join on pmid.  Any other input gets the exchanges it needs from
+    # the planner.
+    #
+    # The sentences JSON must not depend on row order, which follows the
+    # shuffle layout: each section's matches are sorted by position
+    # (the struct's leading fields), then projected to the published
+    # field order; sections are sorted descending, so title precedes
+    # abstract.
     sentences_df = (
         fdf.filter(F.col("section").isin("title", "abstract"))
         .groupBy("pmid", "section")
         .agg(
             F.expr(
-                "struct(section, collect_list(struct("
-                "label, keywordType, keywordId, startInSentence,"
-                " endInSentence, sectionStart, sectionEnd)) AS matches)"
+                "struct(section, transform(array_sort(collect_list(struct("
+                "sectionStart, startInSentence, endInSentence, keywordId,"
+                " label, keywordType, sectionEnd))), m -> struct("
+                "m.label, m.keywordType, m.keywordId, m.startInSentence,"
+                " m.endInSentence, m.sectionStart, m.sectionEnd)) AS matches)"
             ).alias("sentencesBySection")
         )
         .groupBy("pmid")
-        .agg(F.expr("to_json(collect_list(sentencesBySection))").alias("sentences"))
+        .agg(
+            F.expr(
+                "to_json(sort_array(collect_list(sentencesBySection), false))"
+            ).alias("sentences")
+        )
     )
 
     return (
@@ -154,7 +163,11 @@ def run(
     persist reused branches → flatten → literature index.
 
     Returns the five output DataFrames; writing is the caller's choice
-    (sources.write_to), so steps compose in-memory OR via files.
+    (sources.write_to), so steps compose in-memory OR via files.  Write
+    them in the returned order: ``matches`` before ``literatureIndex``,
+    so the index is planned over the built matches cache, which reports
+    its pmid partitioning (an unbuilt cache reports none, and the
+    planner would add the exchanges the index otherwise avoids).
     """
     g = grounding.compute(
         epmc, epmcids, targets, diseases, drugs, trace_source, stemmer

@@ -9,6 +9,10 @@ modern-Spark settings the reference predates (AQE, Arrow).
 Designed for a multi-executor cluster: nothing here assumes local mode.
 ``shuffle_partitions`` should be sized to cluster cores at deploy time
 (AQE coalesces down at runtime, so err high for 100 TB inputs).
+
+Every parquet write (the step outputs and the Word2Vec model save) is
+zstd-compressed; a per-output ``IOResourceConfig.options["compression"]``
+still overrides the codec.
 """
 
 from __future__ import annotations
@@ -16,6 +20,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else half of physical RAM.  In
+    local mode the driver heap is the only heap; a heap as large as the
+    box lets the kernel kill the JVM before the GC runs."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 // 2**20}m"
 
 
 def build_session(
@@ -33,13 +48,10 @@ def build_session(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
-    # local mode: the driver IS the executor — size its heap to the box
-    # (only effective at first JVM launch; harmless afterwards)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.driver.memory", driver_mem)
+        # only effective at first JVM launch; harmless afterwards
+        .config("spark.driver.memory", default_driver_memory())
         # reference session conf (Helpers.scala:40-46)
         .config("spark.driver.maxResultSize", "0")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
@@ -51,6 +63,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # The round-10 expression staging renders hot projections as
         # SQL strings; their backslash escapes (e.g. the grounding
         # `RLIKE '[^\\x20-\\x7e]'`) assume the modern parser default
