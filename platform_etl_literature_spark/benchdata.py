@@ -185,14 +185,9 @@ def epmcids_from(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_literature_pipeline(
-    spark: SparkSession, sf_dir: str, stemmer=None
-) -> DataFrame:
+def run_literature_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grounding + processing end-to-end over the derived corpus;
-    returns the literatureIndex (the flagship output).  ``stemmer``
-    (None = live Porter UDF) selects the LT stemming strategy —
-    functions.text.frozen_stem_terms makes the whole run
-    SQL-replayable (the literature_pipeline_frozen suite row)."""
+    returns the literatureIndex (the flagship output)."""
     from platform_etl_literature_spark.plans import processing
 
     out = processing.run(
@@ -203,6 +198,5 @@ def run_literature_pipeline(
         diseases_from(spark, sf_dir),
         drugs_from(spark, sf_dir),
         trace_source=False,  # derived multi-source corpus
-        stemmer=stemmer,
     )
     return out["literatureIndex"]

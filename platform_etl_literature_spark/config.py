@@ -3,7 +3,7 @@ Configuration.scala:16-71 / reference.conf, as plain dataclasses)."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -54,11 +54,3 @@ class EvidenceConfig:
 
     threshold: float = 0.01
 
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    section_ranks: list[SectionRank] = field(
-        default_factory=lambda: list(DEFAULT_SECTION_RANKS)
-    )
-    word2vec: Word2VecConfig = field(default_factory=Word2VecConfig)
-    evidence: EvidenceConfig = field(default_factory=EvidenceConfig)

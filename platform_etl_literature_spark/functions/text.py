@@ -3,8 +3,8 @@
 The reference grounds entity labels via a Spark NLP pipeline
 (Grounding.scala:45-108): two tokenizer branches producing a symbol
 token column ``TT`` and a stopword-cleaned, normalized, stemmed label
-column ``LT``, plus a Greek→Latin ``normalise`` (Helpers.scala:94-96)
-and key generation (Grounding.scala:367-387).
+column ``LT``, plus a Greek→Latin ``normalise`` (Helpers.scala:94-96,
+here ``normalise_sql``) and key generation (Grounding.scala:367-387).
 
 This rebuild expresses the same capability with Catalyst primitives:
 
@@ -67,17 +67,11 @@ _TT_SPLIT = r"[\s:,;]+"  # TokenizerSymbol splitChars : , ; (Grounding.scala:58)
 _CLEANUP = r"[^\w\d\s]"  # Normalizer cleanup patterns (Grounding.scala:67,81)
 
 
-def normalise(c: Column) -> Column:
-    """Greek→Latin letter mapping (Helpers.scala:94-96)."""
-    return F.translate(c, "αβγδεζηικλμνξπτυω", "abgdezhiklmnxptuo")
-
-
 def normalise_sql(c: str) -> str:
-    """:func:`normalise` as a staged SQL fragment (round 10 expression
-    staging) — the identical translate call, parsed JVM-side.
-    ``c`` is interpolated verbatim: pass a pre-validated SQL
-    expression or an already-backtick-quoted identifier (ADVICE
-    r10); nothing is escaped here."""
+    """Greek→Latin letter mapping (Helpers.scala:94-96) as a staged SQL
+    fragment.  ``c`` is interpolated verbatim: pass a pre-validated SQL
+    expression or an already-backtick-quoted identifier; nothing is
+    escaped here."""
     return f"translate({c}, 'αβγδεζηικλμνξπτυω', 'abgdezhiklmnxptuo')"
 
 
@@ -129,15 +123,12 @@ _stem_tokens = _make_stem_udf().asNondeterministic()
 
 
 # ---------------------------------------------------------------------------
-# expression staging (round 10): every helper below assembles its whole
-# expression as ONE SQL string parsed JVM-side (the layout.py staging
-# policy).  A Python-lambda higher-order function costs ~25 ms of py4j
-# round-trips PER CALL to build (measured: 50 HOF builds = 1.35 s of the
-# grounding chain's 3.4 s driver-side construction), and Column.isin over
-# the 340-word stopword list creates one JVM literal per word; an f-string
-# rendering of the same expression is one round-trip.  The SQL text
-# parses to the identical Catalyst expression the lambda API produced —
-# values are unchanged (gated by the full oracle suite).
+# expression staging: every helper below assembles its whole expression as
+# ONE SQL string parsed JVM-side.  A Python-lambda higher-order function
+# costs ~25 ms of py4j round-trips PER CALL to build (measured: 50 HOF
+# builds = 1.35 s of the grounding chain's 3.4 s driver-side construction),
+# and Column.isin over the 340-word stopword list creates one JVM literal
+# per word; an f-string rendering of the same expression is one round-trip.
 # ---------------------------------------------------------------------------
 
 
@@ -147,104 +138,38 @@ def _sql_str(s: str) -> str:
 
 
 _STOP_IN_SQL = "(" + ",".join(_sql_str(w) for w in ALL_STOP_WORDS) + ")"
+_CLEAN_SQL = f"_t -> regexp_replace(lower(_t), {_sql_str(_CLEANUP)}, '')"
 
 
 def _nonempty_sql(arr: str) -> str:
     return f"filter({arr}, _t -> _t IS NOT NULL AND _t != '')"
 
 
-def _token_terms_sql(text: str) -> str:
-    return _nonempty_sql(
-        f"transform(split({text}, {_sql_str(_TT_SPLIT)}),"
-        f" _t -> regexp_replace(lower(_t), {_sql_str(_CLEANUP)}, ''))"
+def token_terms(text: str) -> Column:
+    """TT branch over the column named ``text``: symbol tokens — split,
+    lowercase, strip punctuation."""
+    return F.expr(
+        _nonempty_sql(f"transform(split(`{text}`, {_sql_str(_TT_SPLIT)}), {_CLEAN_SQL})")
     )
 
 
-def _label_terms_unstemmed_sql(text: str) -> str:
-    kept = (
-        f"filter(split({text}, {_sql_str(_LT_SPLIT)}),"
-        f" _t -> NOT (_t IN {_STOP_IN_SQL}))"
-    )
-    return _nonempty_sql(
-        f"transform({kept},"
-        f" _t -> regexp_replace(lower(_t), {_sql_str(_CLEANUP)}, ''))"
-    )
+def label_terms_unstemmed(text: str) -> Column:
+    """LT branch before stemming over the column named ``text``: split,
+    case-sensitive stopword removal (on raw tokens, as the reference
+    cleans before lowering), lowercase, strip punctuation."""
+    kept = f"filter(split(`{text}`, {_sql_str(_LT_SPLIT)}), _t -> NOT (_t IN {_STOP_IN_SQL}))"
+    return F.expr(_nonempty_sql(f"transform({kept}, {_CLEAN_SQL})"))
 
 
-def frozen_stem_terms(arr: Column) -> Column:
-    """Frozen-map stemmer strategy (VERDICT r9 item 4 — the
-    w2v_frozen / PQ-codebook build-once pattern applied to the
-    pipeline's single Python stage): stems each token via the
-    STEM_FROZEN lookup (functions/stem_frozen.py, built once by
-    tools/build_frozen_stems.py from the fixture label vocabulary),
-    coalescing unseen tokens to identity.  Pure Catalyst — a map
-    literal probed per element inside ``transform`` — so a pipeline
-    run with this strategy is fully SQL-replayable: the DuckDB oracle
-    carries the same pairs and the same identity fallback, making
-    the two engines identical at ANY scale factor by construction
-    (out-of-vocabulary tokens pass through unstemmed on BOTH sides).
-    Interchangeable with the Porter UDF wherever the vocabulary is
-    covered; the live-Porter path remains the production default."""
-    from platform_etl_literature_spark.functions.stem_frozen import (
-        STEM_FROZEN,
-    )
-
-    if not STEM_FROZEN:
-        return arr
-    m = F.map_from_arrays(
-        F.lit([t for t, _ in STEM_FROZEN]),
-        F.lit([s for _, s in STEM_FROZEN]),
-    )
-    return F.transform(arr, lambda t: F.coalesce(m[t], t))
-
-
-def _nonempty(arr: Column) -> Column:
-    return F.filter(arr, lambda t: t.isNotNull() & (t != ""))
-
-
-def token_terms(text: Column | str) -> Column:
-    """TT branch: symbol tokens — split, lowercase, strip punctuation.
-
-    Accepts a column NAME (fast path: one staged SQL expression) or a
-    Column (compat path for composed expressions)."""
-    if isinstance(text, str):
-        return F.expr(_token_terms_sql(f"`{text}`"))
-    toks = F.split(text, _TT_SPLIT)
-    return _nonempty(
-        F.transform(toks, lambda t: F.regexp_replace(F.lower(t), _CLEANUP, ""))
-    )
-
-
-def label_terms_unstemmed(text: Column | str) -> Column:
-    """LT branch before stemming: split, case-sensitive stopword
-    removal (on raw tokens, as the reference cleans before lowering),
-    lowercase, strip punctuation.  Accepts a column NAME (fast staged
-    path) or a Column (compat path)."""
-    if isinstance(text, str):
-        return F.expr(_label_terms_unstemmed_sql(f"`{text}`"))
-    toks = F.split(text, _LT_SPLIT)
-    kept = F.filter(toks, lambda t: ~t.isin(ALL_STOP_WORDS))
-    return _nonempty(
-        F.transform(kept, lambda t: F.regexp_replace(F.lower(t), _CLEANUP, ""))
-    )
-
-
-def normalise_sentence(
-    df: DataFrame, text_col: str, prefix: str, stemmer=None
-) -> DataFrame:
+def normalise_sentence(df: DataFrame, text_col: str, prefix: str) -> DataFrame:
     """Add ``{prefix}_TT`` and ``{prefix}_LT`` token-array columns —
     the capability of ``Grounding.normaliseSentence`` (:144-158) +
-    the NLP pipeline, with stemming as the single Python stage.
-
-    ``stemmer`` (Column → Column over the unstemmed LT token array)
-    defaults to the Porter pandas UDF; pass
-    :func:`frozen_stem_terms` for the SQL-replayable frozen-map
-    strategy."""
-    st = stemmer if stemmer is not None else _stem_tokens
+    the NLP pipeline, with the Porter stemmer as the single Python
+    stage."""
     return df.select(
         "*",
         token_terms(text_col).alias(f"{prefix}_{TOKEN_T}"),
-        st(label_terms_unstemmed(text_col)).alias(f"{prefix}_{LABEL_T}"),
+        _stem_tokens(label_terms_unstemmed(text_col)).alias(f"{prefix}_{LABEL_T}"),
     )
 
 

@@ -3,9 +3,9 @@
 Re-expression of the reference's ``Main`` + ``ETLSessionContext``
 (Main.scala:8-62, ETLSessionContext.scala:14-17): steps are named
 ``processing | embedding | vectors | evidence``; ``all`` runs them in
-order.  Unlike the reference (which re-reads every intermediate from
-disk even under ``all`` — SURVEY.md §0), ``all`` here passes DataFrames
-between steps in memory and only writes the configured outputs.
+order.  As in the reference (SURVEY.md §0), steps hand off only through
+files: each step reads what an earlier step wrote to the output
+directory, whether it runs alone or under ``all``.
 
 Config is a JSON file::
 
@@ -76,76 +76,72 @@ def _out(cfg: dict, name: str, df) -> dict[str, IOResource]:
 
 
 def run_all(spark: SparkSession, cfg: dict, steps: list[str]) -> None:
-    """Run ``steps`` in order, each writing its configured outputs.
+    """Run ``steps`` in pipeline order, each writing its outputs to the
+    output directory and reading its inputs from there (processing reads
+    the configured inputs).
 
-    What the steps persist (grounding's mapped labels, the matches and
-    co-occurrences, the Word2Vec training set) serves only their own
-    writes, so the session's cache is cleared once the steps finish:
-    no persisted block outlives the call.  Production runs each step
-    in its own session; a caller that shares the session loses its own
-    cached frames too (they recompute on next use).
+    What a step persists (grounding's mapped labels, the matches and
+    co-occurrences, the Word2Vec training set) serves only its own
+    writes, so the session's cache is cleared after each step: no
+    persisted block outlives it.  A caller that shares the session loses
+    its own cached frames too (they recompute on next use).
     """
-    try:
-        _run_steps(spark, cfg, steps)
-    finally:
-        spark.catalog.clearCache()
+    for step in STEPS:
+        if step in steps:
+            try:
+                _STEP_RUNNERS[step](spark, cfg)
+            finally:
+                spark.catalog.clearCache()
 
 
-def _run_steps(spark: SparkSession, cfg: dict, steps: list[str]) -> None:
-    inputs = read_from(spark, _io_configs(cfg["inputs"]))
-    out_fmt = cfg["output"]["format"]
-    out_dir = cfg["output"]["dir"]
+def _load(spark: SparkSession, cfg: dict, name: str):
+    return spark.read.format(cfg["output"]["format"]).load(f"{cfg['output']['dir']}/{name}")
 
-    processed = None
-    if "processing" in steps:
-        processed = processing_plan.run(
-            spark,
-            inputs["epmc"].data,
-            inputs["epmcids"].data,
-            inputs["targets"].data,
-            inputs["diseases"].data,
-            inputs["drugs"].data,
-        )
-        write_to(
-            {
-                name: IOResource(
-                    df, IOResourceConfig(out_fmt, f"{out_dir}/{name}")
-                )
-                for name, df in processed.items()
-            }
-        )
 
-    def matches():
-        if processed is not None:
-            return processed["matches"]
-        return spark.read.format(out_fmt).load(f"{out_dir}/matches")
+def _load_model(cfg: dict):
+    from pyspark.ml.feature import Word2VecModel
 
-    model = None
-    if "embedding" in steps:
-        w2v = Word2VecConfig(**cfg.get("word2vec", {}))
-        model, training = embedding_plan.run(spark, matches(), w2v)
-        write_to({"trainingSet": IOResource(training, IOResourceConfig(out_fmt, f"{out_dir}/trainingSet"))})
-        model.write().overwrite().save(f"{out_dir}/w2v_model")
+    return Word2VecModel.load(f"{cfg['output']['dir']}/w2v_model")
 
-    def load_model():
-        if model is not None:
-            return model
-        from pyspark.ml.feature import Word2VecModel
 
-        return Word2VecModel.load(f"{out_dir}/w2v_model")
+def _processing(spark: SparkSession, cfg: dict) -> None:
+    src = read_from(spark, _io_configs(cfg["inputs"]))
+    outputs = processing_plan.run(
+        spark,
+        *(src[n].data for n in ("epmc", "epmcids", "targets", "diseases", "drugs")),
+    )
+    for name, df in outputs.items():  # in order: matches before literatureIndex
+        write_to(_out(cfg, name, df))
 
-    if "vectors" in steps:
-        write_to(_out(cfg, "vectors", vectors_plan.run(load_model())))
 
-    if "evidence" in steps:
-        coocs = (
-            processed["cooccurrences"]
-            if processed is not None
-            else spark.read.format(out_fmt).load(f"{out_dir}/cooccurrences")
-        )
-        ev_conf = EvidenceConfig(**cfg.get("evidence", {}))
-        ev = evidence_plan.run(spark, load_model(), matches(), coocs, ev_conf)
-        write_to(_out(cfg, "evidence", ev))
+def _embedding(spark: SparkSession, cfg: dict) -> None:
+    w2v = Word2VecConfig(**cfg.get("word2vec", {}))
+    model, training = embedding_plan.run(spark, _load(spark, cfg, "matches"), w2v)
+    write_to(_out(cfg, "trainingSet", training))
+    model.write().overwrite().save(f"{cfg['output']['dir']}/w2v_model")
+
+
+def _vectors(spark: SparkSession, cfg: dict) -> None:
+    write_to(_out(cfg, "vectors", vectors_plan.run(_load_model(cfg))))
+
+
+def _evidence(spark: SparkSession, cfg: dict) -> None:
+    ev = evidence_plan.run(
+        spark,
+        _load_model(cfg),
+        _load(spark, cfg, "matches"),
+        _load(spark, cfg, "cooccurrences"),
+        EvidenceConfig(**cfg.get("evidence", {})),
+    )
+    write_to(_out(cfg, "evidence", ev))
+
+
+_STEP_RUNNERS = {
+    "processing": _processing,
+    "embedding": _embedding,
+    "vectors": _vectors,
+    "evidence": _evidence,
+}
 
 
 def run_curate(spark: SparkSession, cfg: dict) -> None:

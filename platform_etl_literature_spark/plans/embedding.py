@@ -13,7 +13,7 @@ from pyspark.ml.feature import Word2Vec, Word2VecModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from platform_etl_literature_spark.config import SectionRank, Word2VecConfig
+from platform_etl_literature_spark.config import Word2VecConfig
 from platform_etl_literature_spark.plans.processing import section_rank_table
 
 W2V_TYPES = ["DS", "GP", "CD"]
@@ -27,9 +27,7 @@ def filter_matches_for_embedding(matches: DataFrame) -> DataFrame:
     )
 
 
-def regroup_matches(
-    df: DataFrame, spark: SparkSession, ranks: list[SectionRank] | None = None
-) -> DataFrame:
+def regroup_matches(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Training sentences: entity sets per (pmid, section-rank) plus an
     overall per-pmid set (Embedding.regroupMatches:25-67).
 
@@ -38,7 +36,7 @@ def regroup_matches(
     groups in rank order.  Sets are sorted, so the rows do not depend on
     the order in which mentions arrive.
     """
-    rank_table = F.broadcast(section_rank_table(spark, ranks))
+    rank_table = F.broadcast(section_rank_table(spark))
     return (
         df.join(rank_table, ["section"])
         .groupBy("pmid", "rank")
@@ -84,13 +82,10 @@ def run(
     spark: SparkSession,
     matches: DataFrame,
     conf: Word2VecConfig | None = None,
-    ranks: list[SectionRank] | None = None,
 ) -> tuple[Word2VecModel, DataFrame]:
     """Full embedding step (Embedding.generateModel:69-79): returns the
     model and the training set (the reference also writes the training
     set; callers persist/write as needed)."""
-    training = regroup_matches(
-        filter_matches_for_embedding(matches), spark, ranks
-    ).persist()
+    training = regroup_matches(filter_matches_for_embedding(matches), spark).persist()
     model = make_word2vec_model(training, conf)
     return model, training

@@ -22,7 +22,7 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from platform_etl_literature_spark.config import EvidenceConfig, SectionRank
+from platform_etl_literature_spark.config import EvidenceConfig
 from platform_etl_literature_spark.functions.harmonic import (
     harmonic_sorted,
     harmonic_sql,
@@ -63,7 +63,6 @@ def evidence_from_matches(
     matches: DataFrame,
     spark: SparkSession,
     threshold: float | None = None,
-    ranks: list[SectionRank] | None = None,
 ) -> DataFrame:
     """Matches path (Evidence.computeEvidenceFromMatches:36-104):
     mention frequency per (pmid, type, keyword) → attach vectors →
@@ -75,7 +74,7 @@ def evidence_from_matches(
     ``model_vectors(model)`` for the Word2Vec model, or any embedding
     table (the step is embedding-agnostic by design).
     """
-    rank_table = F.broadcast(section_rank_table(spark, ranks))
+    rank_table = F.broadcast(section_rank_table(spark))
     thresh = threshold if threshold is not None else sys.float_info.min
 
     m_with_v = (
@@ -186,14 +185,11 @@ def run(
     matches: DataFrame,
     coocs: DataFrame,
     conf: EvidenceConfig | None = None,
-    ranks: list[SectionRank] | None = None,
 ) -> DataFrame:
     """Full evidence step (Evidence.generateEvidence:132-146): left join
     the two paths on the pair key, nulls → 0.0."""
     conf = conf or EvidenceConfig()
-    ev_m = evidence_from_matches(
-        model_vectors(model), matches, spark, conf.threshold, ranks
-    )
+    ev_m = evidence_from_matches(model_vectors(model), matches, spark, conf.threshold)
     ev_c = evidence_from_coocs(coocs)
     join_cols = ["targetFromSourceId", "diseaseFromSourceMappedId"]
     return ev_m.join(ev_c, join_cols, "left_outer").na.fill(0.0)

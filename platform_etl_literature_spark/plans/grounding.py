@@ -121,13 +121,11 @@ def _explode_variants(df: DataFrame, variant_frags: list[str], distinct: bool) -
     )
 
 
-def _normalise_and_key(df: DataFrame, prefix: str, stemmer=None) -> DataFrame:
-    return with_keys_column(
-        normalise_sentence(df, "text", prefix, stemmer), prefix, "key"
-    )
+def _normalise_and_key(df: DataFrame, prefix: str) -> DataFrame:
+    return with_keys_column(normalise_sentence(df, "text", prefix), prefix, "key")
 
 
-def transform_diseases(diseases: DataFrame, stemmer=None) -> DataFrame:
+def transform_diseases(diseases: DataFrame) -> DataFrame:
     """Disease LUT variants (Grounding.transformDiseases:389-429):
     name=1.0, exact=0.999, narrow=0.998, broad=0.997, related=0.996 —
     all label-type keys."""
@@ -143,10 +141,10 @@ def transform_diseases(diseases: DataFrame, stemmer=None) -> DataFrame:
         ],
         distinct=False,
     )
-    return _normalise_and_key(variants, "efoTerms", stemmer)
+    return _normalise_and_key(variants, "efoTerms")
 
 
-def transform_targets(targets: DataFrame, stemmer=None) -> DataFrame:
+def transform_targets(targets: DataFrame) -> DataFrame:
     """Target LUT variants (Grounding.transformTargets:431-487): name
     (label 1.0), symbol (token 1.0), synonyms 0.999, obsolete 0.998,
     protein accessions (token 0.999)."""
@@ -174,10 +172,10 @@ def transform_targets(targets: DataFrame, stemmer=None) -> DataFrame:
         ],
         distinct=True,
     )
-    return _normalise_and_key(variants, "targetTerms", stemmer)
+    return _normalise_and_key(variants, "targetTerms")
 
 
-def transform_drugs(drugs: DataFrame, stemmer=None) -> DataFrame:
+def transform_drugs(drugs: DataFrame) -> DataFrame:
     """Drug LUT variants (Grounding.transformDrugs:489-516): name and
     synonyms under BOTH key types."""
     d = drugs.selectExpr("id as keywordId", "name", "tradeNames", "synonyms")
@@ -193,19 +191,19 @@ def transform_drugs(drugs: DataFrame, stemmer=None) -> DataFrame:
         ],
         distinct=False,
     )
-    return _normalise_and_key(variants, "drugTerms", stemmer)
+    return _normalise_and_key(variants, "drugTerms")
 
 
 def load_entity_lut(
-    targets: DataFrame, diseases: DataFrame, drugs: DataFrame, stemmer=None
+    targets: DataFrame, diseases: DataFrame, drugs: DataFrame
 ) -> DataFrame:
     """3-way union of entity LUTs + ambiguity count per (type, labelN)
     (Grounding.loadEntityLUT:518-554).  The result is small relative to
     the corpus and is broadcast by the caller."""
     cols = ["key as labelN", "type", "keywordId", "factor"]
-    ds = transform_diseases(diseases, stemmer).withColumn("type", F.lit("DS")).selectExpr(*cols)
-    gp = transform_targets(targets, stemmer).withColumn("type", F.lit("GP")).selectExpr(*cols)
-    cd = transform_drugs(drugs, stemmer).withColumn("type", F.lit("CD")).selectExpr(*cols)
+    ds = transform_diseases(diseases).withColumn("type", F.lit("DS")).selectExpr(*cols)
+    gp = transform_targets(targets).withColumn("type", F.lit("GP")).selectExpr(*cols)
+    cd = transform_drugs(drugs).withColumn("type", F.lit("CD")).selectExpr(*cols)
     # One shuffle instead of two (the reference's distinct() + windowed
     # approx_count_distinct, Grounding.scala:547-550, shuffles the full
     # row once on all columns and again on (type, labelN)): collect the
@@ -268,7 +266,9 @@ def load_entities(
     df: DataFrame, epmcids: DataFrame, trace_source: bool = True
 ) -> DataFrame:
     """Sentinel null-out, pmid repair via anti/outer joins, date split,
-    sentence explode, failure diagnostics (Grounding.loadEntities:314-350).
+    sentence explode (Grounding.loadEntities:314-350).  The reference's
+    ``failed_*`` diagnostic flags are not built: its filterEntities
+    drops them before any output reads them.
 
     ``trace_source=False`` for derived (multi-source) corpora:
     ``input_file_name()`` resolves only over single-source plans.
@@ -276,11 +276,9 @@ def load_entities(
     e_ids = F.broadcast(epmcids)
     pm_ids = F.broadcast(epmcids)
 
-    # The former withColumns batches are staged as selectExpr layers
-    # (round 10 expression staging): each layer is ONE parse-once
-    # projection — same expressions, same values, same column order
-    # (in-place replacements keep their position, new columns append
-    # exactly as withColumns appended them); joins stay DataFrame API.
+    # Each projection is one parse-once selectExpr: in-place
+    # replacements keep their position, new columns append; joins stay
+    # DataFrame API.
     def null_out(c: str) -> str:
         # _null_out_sentinels as SQL: NULL unless non-empty and not "0"
         return (
@@ -294,20 +292,11 @@ def load_entities(
     ] + [("input_file_name()" if trace_source else "''") + " AS trace_source"]
     joined = (
         df.selectExpr(*l1)
-        .selectExpr(
-            "*",
-            "pmid IS NULL AS failed_pmid",
-            "pmcid IS NULL AS failed_pmcid",
-            "pmcid IS NULL AND pmid IS NULL AS failed_pmcid_and_pmid",
-        )
         # drop rows whose pmid is a known id but pmcid is missing
         .join(
             pm_ids,
             (F.col("pmid_lut") == F.col("pmid")) & F.col("pmcid").isNull(),
             "left_anti",
-        )
-        .selectExpr(
-            "*", "pmid IS NULL AND pmcid IS NOT NULL AS failed_pmid_not_pmcid"
         )
         # recover pmid from pmcid
         .join(e_ids, F.col("pmcid") == F.col("pmcid_lut"), "left_outer")
@@ -322,14 +311,11 @@ def load_entities(
         )
         .selectExpr(
             "*",
-            "failed_pmid_not_pmcid AND pmid IS NOT NULL"
-            " AS failed_recover_pmid_not_pmcid",
             "CASE WHEN pubDate IS NOT NULL AND pubDate != ''"
             " THEN CAST(pubDate AS DATE) END AS date",
         )
         .selectExpr(
             "*",
-            "date IS NULL AS failed_date",
             "CASE WHEN date IS NOT NULL THEN year(date) END AS year",
             "CASE WHEN date IS NOT NULL THEN month(date) END AS month",
             "CASE WHEN date IS NOT NULL THEN dayofmonth(date) END AS day",
@@ -343,21 +329,13 @@ def load_entities(
         *[
             "lower(section) AS section" if c == "section" else f"`{c}`"
             for c in exploded.columns
-        ],
-        "section IS NULL AS failed_section",
-        r"text RLIKE '[^\\x20-\\x7e]' AS failed_sentence",
+        ]
     )
 
 
 def filter_entities(df: DataFrame) -> DataFrame:
-    """Drop failure-diagnostic columns, keep resolvable rows
-    (Grounding.filterEntities:352-360)."""
-    failed = [c for c in df.columns if c.startswith("failed_")]
-    return (
-        df.drop(*failed)
-        .filter(F.col("pmid").isNotNull())
-        .filter(F.col("section").isNotNull())
-    )
+    """Keep resolvable rows (Grounding.filterEntities:352-360)."""
+    return df.filter(F.col("pmid").isNotNull()).filter(F.col("section").isNotNull())
 
 
 # ---------------------------------------------------------------------------
@@ -365,7 +343,7 @@ def filter_entities(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def map_entities(entities: DataFrame, luts: DataFrame, stemmer=None) -> DataFrame:
+def map_entities(entities: DataFrame, luts: DataFrame) -> DataFrame:
     """Ground NER labels: normalize each mention label under its
     key-type variants, join the LUT, keep dense_rank-1 candidates
     (Grounding.mapEntities:160-206)."""
@@ -396,9 +374,7 @@ def map_entities(entities: DataFrame, luts: DataFrame, stemmer=None) -> DataFram
         .selectExpr("*", "_textV.keyValue AS text", "_textV.keyType AS keyType")
     )
     keyed = with_keys_column(
-        normalise_sentence(labels, "text", "nerTerms", stemmer),
-        "nerTerms",
-        "labelN",
+        normalise_sentence(labels, "text", "nerTerms"), "nerTerms", "labelN"
     )
     w = Window.partitionBy("type", "labelN").orderBy(F.col("factor").desc())
     out_cols = sorted(
@@ -582,15 +558,10 @@ def compute(
     diseases: DataFrame,
     drugs: DataFrame,
     trace_source: bool = True,
-    stemmer=None,
 ) -> dict[str, DataFrame]:
-    """Full grounding step (Grounding.compute:563-610).  ``stemmer``
-    (None = the Porter pandas UDF) selects the LT stemming strategy
-    for LUTs and mention labels alike — pass
-    functions.text.frozen_stem_terms for the SQL-replayable frozen
-    map."""
+    """Full grounding step (Grounding.compute:563-610)."""
     id_lut = load_epmc_ids(epmcids)
-    luts = F.broadcast(load_entity_lut(targets, diseases, drugs, stemmer))
+    luts = F.broadcast(load_entity_lut(targets, diseases, drugs))
     sentences = filter_entities(
         load_entities(replace_spaces_schema(epmc), id_lut, trace_source)
     )
@@ -599,7 +570,5 @@ def compute(
     # with execution memory
     from pyspark.storagelevel import StorageLevel
 
-    mapped_labels = map_entities(sentences, luts, stemmer).persist(
-        StorageLevel.DISK_ONLY
-    )
+    mapped_labels = map_entities(sentences, luts).persist(StorageLevel.DISK_ONLY)
     return resolve_entities(sentences, mapped_labels)

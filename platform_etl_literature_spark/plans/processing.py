@@ -12,20 +12,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from platform_etl_literature_spark.config import DEFAULT_SECTION_RANKS, SectionRank
+from platform_etl_literature_spark.config import DEFAULT_SECTION_RANKS
 from platform_etl_literature_spark.functions.harmonic import harmonic_sql
 from platform_etl_literature_spark.plans import grounding
 
 
-def section_rank_table(
-    spark: SparkSession, ranks: list[SectionRank] | None = None
-) -> DataFrame:
+def section_rank_table(spark: SparkSession) -> DataFrame:
     """Lift the config section-rank list to a broadcastable table
     (Processing.scala:59-64)."""
-    ranks = ranks if ranks is not None else DEFAULT_SECTION_RANKS
     return local_df(
         spark,
-        [(r.section, r.rank, r.weight) for r in ranks],
+        [(r.section, r.rank, r.weight) for r in DEFAULT_SECTION_RANKS],
         "section STRING, rank INT, weight DOUBLE",
     )
 
@@ -49,11 +46,7 @@ def filter_cooccurrences(df: DataFrame, is_mapped: bool = True) -> DataFrame:
     )
 
 
-def literature_index(
-    df: DataFrame,
-    spark: SparkSession,
-    ranks: list[SectionRank] | None = None,
-) -> DataFrame:
+def literature_index(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Per-(pmid, keyword) relevance for the search index
     (Processing.filterMatchesForCH:53-125):
 
@@ -64,9 +57,8 @@ def literature_index(
     * per pmid: title/abstract mentions serialized to a JSON sentences
       blob.
     """
-    ranks = ranks if ranks is not None else DEFAULT_SECTION_RANKS
-    title_weight = next(r.weight for r in ranks if r.section == "title")
-    rank_table = F.broadcast(section_rank_table(spark, ranks))
+    title_weight = next(r.weight for r in DEFAULT_SECTION_RANKS if r.section == "title")
+    rank_table = F.broadcast(section_rank_table(spark))
 
     # Projections and window expressions are staged as selectExpr
     # strings (round 10 expression staging) — same values, same column
@@ -155,23 +147,19 @@ def run(
     targets: DataFrame,
     diseases: DataFrame,
     drugs: DataFrame,
-    ranks: list[SectionRank] | None = None,
     trace_source: bool = True,
-    stemmer=None,
 ) -> dict[str, DataFrame]:
     """Full processing step (Processing.apply:180-223): grounding →
     persist reused branches → flatten → literature index.
 
-    Returns the five output DataFrames; writing is the caller's choice
-    (sources.write_to), so steps compose in-memory OR via files.  Write
-    them in the returned order: ``matches`` before ``literatureIndex``,
-    so the index is planned over the built matches cache, which reports
-    its pmid partitioning (an unbuilt cache reports none, and the
-    planner would add the exchanges the index otherwise avoids).
+    Returns the five output DataFrames for the caller to write
+    (sources.write_to).  Write them in the returned order: ``matches``
+    before ``literatureIndex``, so the index is planned over the built
+    matches cache, which reports its pmid partitioning (an unbuilt cache
+    reports none, and the planner would add the exchanges the index
+    otherwise avoids).
     """
-    g = grounding.compute(
-        epmc, epmcids, targets, diseases, drugs, trace_source, stemmer
-    )
+    g = grounding.compute(epmc, epmcids, targets, diseases, drugs, trace_source)
     for name in ("matches", "cooccurrences"):
         g[name].persist(StorageLevel.DISK_ONLY)
 
@@ -182,5 +170,5 @@ def run(
         "failedCooccurrences": g["cooccurrencesFailed"],
         "matches": matches,
         "cooccurrences": coocs,
-        "literatureIndex": literature_index(matches, spark, ranks),
+        "literatureIndex": literature_index(matches, spark),
     }

@@ -64,13 +64,13 @@ def build_session(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # The round-10 expression staging renders hot projections as
-        # SQL strings; their backslash escapes (e.g. the grounding
-        # `RLIKE '[^\\x20-\\x7e]'`) assume the modern parser default
+        # The expression staging renders hot projections as SQL
+        # strings; their backslash escapes (the split and cleanup
+        # regexes and the quoted stopwords such as 'aren\'t' that
+        # functions/text._sql_str renders) assume the parser default
         # escapedStringLiterals=false.  Pin it explicitly so a legacy
-        # override can never silently change a staged regex (ADVICE
-        # r10); the driver's bare session gets the same value as the
-        # Spark default.
+        # override can never silently change a staged literal; a bare
+        # session gets the same value as the Spark default.
         .config("spark.sql.parser.escapedStringLiterals", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -116,9 +116,7 @@ def test_embedding_vectors_evidence_end_to_end(outputs, spark):
     assert all(r["norm"] > 0 for r in vrows.values())
     assert len(vrows["CHEMBL25"]["vector"]) == 8
 
-    ev = evidence.run(
-        spark, model, matches, outputs["cooccurrences"], conf=None, ranks=None
-    )
+    ev = evidence.run(spark, model, matches, outputs["cooccurrences"], conf=None)
     # with the default 0.01 threshold the tiny-corpus similarity may be
     # filtered; rerun unthresholded through the matches path directly
     ev_all = evidence.evidence_from_matches(
@@ -185,52 +183,3 @@ def test_replace_spaces_schema(spark):
     assert out.schema["nested"].dataType.elementType.fields[0].name == "inner_field"
     assert out.collect()[0]["nested"][0]["inner_field"] == 1
 
-
-def test_frozen_stem_pipeline_matches_live_porter(spark):
-    """The frozen Porter map (functions/stem_frozen.py, built by
-    tools/build_frozen_stems.py) must reproduce the LIVE Porter
-    pipeline bit-for-bit on the fixture corpus — the guard that the
-    literature_pipeline_frozen suite row's full-oracle parity is a
-    statement about the PRODUCTION pipeline, not about a divergent
-    frozen variant.  If a fixture change grows the label vocabulary
-    past the artifact, this test fails and the artifact is
-    regenerated."""
-    import os
-
-    from platform_etl_literature_spark.benchdata import (
-        run_literature_pipeline,
-    )
-    from platform_etl_literature_spark.functions.text import (
-        frozen_stem_terms,
-    )
-
-    sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-    cols = ["pmid", "keywordId", "keywordType", "relevance"]
-    live = sorted(
-        map(tuple, run_literature_pipeline(spark, sf).select(*cols).collect())
-    )
-    froz = sorted(
-        map(
-            tuple,
-            run_literature_pipeline(spark, sf, stemmer=frozen_stem_terms)
-            .select(*cols)
-            .collect(),
-        )
-    )
-    assert live == froz
-    assert len(live) > 0
-
-
-def test_frozen_stem_terms_maps_and_falls_back(spark):
-    from platform_etl_literature_spark.functions.stem_frozen import (
-        STEM_FROZEN,
-    )
-    from platform_etl_literature_spark.functions.text import (
-        frozen_stem_terms,
-    )
-
-    tok, st = STEM_FROZEN[0] if STEM_FROZEN else ("large", "large")
-    df = spark.createDataFrame([([tok, "zzznotinmap"],)], ["a"])
-    out = df.select(frozen_stem_terms(F.col("a")).alias("s")).collect()[0]["s"]
-    want = [st if STEM_FROZEN else tok, "zzznotinmap"]
-    assert out == want

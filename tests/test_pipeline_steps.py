@@ -3,6 +3,7 @@
 the output layout (zstd parquet, matches and co-occurrences clustered by
 publication), the plan shapes that layout relies on, outputs that do not
 depend on the shuffle layout, no persisted block left behind by a step,
+the same outputs from one all-steps call as from single-step calls,
 reproducible Word2Vec vectors, and the session's heap default."""
 
 from __future__ import annotations
@@ -76,6 +77,25 @@ def steps_run(spark, corpus_dir):
 def test_no_persisted_blocks_after_each_step(steps_run):
     _, left = steps_run
     assert left == {step: set() for step in STEPS}
+
+
+def test_all_steps_in_one_call_match_single_step_calls(spark, corpus_dir, steps_run):
+    """Steps hand off only through files, so one run_all over every step
+    writes what the four single-step calls wrote."""
+    single, _ = steps_run
+    together = corpus_dir.parent / "together"
+    run_all(
+        spark,
+        {"inputs": _inputs(corpus_dir), "output": {"dir": str(together), "format": "parquet"}},
+        STEPS,
+    )
+    assert check.digest(str(together)) == check.digest(str(single))
+
+    def evidence(out: Path) -> list[tuple]:
+        return sorted(map(tuple, spark.read.parquet(str(out / "evidence")).collect()))
+
+    rows = evidence(together)
+    assert rows and rows == evidence(single)
 
 
 def test_every_written_parquet_file_is_zstd(steps_run):

@@ -3,6 +3,8 @@ same results as their batch twins over the full (finite) events table."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -235,6 +237,10 @@ def test_ingest_dedup_across_and_within_batches(spark, tmp_path):
 
     arrive("f1.parquet", [(1, "alpha"), (2, "alpha"), (3, "beta")])
     arrive("f2.parquet", [(4, "beta"), (5, "gamma"), (6, "gamma")])
+    # the file source orders files by modification time; files written
+    # back to back can share one, so give f2 a later one
+    t1 = os.stat(land / "f1.parquet").st_mtime
+    os.utime(land / "f2.parquet", (t1 + 10, t1 + 10))
 
     stream = (
         spark.readStream.schema("doc_id long, text string")
