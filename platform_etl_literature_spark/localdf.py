@@ -2,7 +2,7 @@
 
 ``spark.createDataFrame(list_of_tuples, ddl)`` ships the rows through a
 ``defaultParallelism``-slice pickled Python RDD: EVERY materialization
-of the frame (each broadcast build, each bench rep) runs a job whose
+of the frame (each broadcast build, each repeated query) runs a job whose
 tasks each launch a Python worker — measured 0.25-1.6 s per build for a
 one-row Bloom-filter table, and the cost repeats because nothing is
 cached.  Routing the same data through pandas engages Spark's Arrow
@@ -42,7 +42,7 @@ def _ddl_field_names(schema: str) -> list[str]:
 # Plan METADATA only — never data or results; the same logical plan in
 # the same session scans the same files the same way, so the expensive
 # .rdd physical-planning probe (measured 31-55 ms per call, paid once
-# per fan_out site per bench rep) runs once per distinct plan.  Keyed
+# per fan_out site per query call) runs once per distinct plan.  Keyed
 # weakly on the session object, so a session's entries die with it: an
 # id() key could be reused by a later session and serve its stale
 # counts.  A plan whose files change mid-session keeps its first count

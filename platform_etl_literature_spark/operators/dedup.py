@@ -17,9 +17,9 @@ Design notes (100 TB scale)
   materialized ONCE via ``persist(MEMORY_AND_DISK)`` so the expensive
   upstream (tokenize/hash/aggregate) never runs twice.  Persist (not
   ``localCheckpoint``) on measurement AND cluster semantics: the A/B
-  at sf0.1 (tools/ab_dedup*.py, round 4) has persist beating the
-  round-3 eager checkpoint 2-4× on every path (checkpoint pays an
-  extra serialize-all job up front, and its blocks survive
+  at sf0.1 (round 4, tools/ab_dedup.py at commit a2c6231) has persist
+  beating the round-3 eager checkpoint 2-4× on every path (checkpoint
+  pays an extra serialize-all job up front, and its blocks survive
   ``spark.catalog.clearCache()``, degrading every later query in the
   session), and persist keeps lineage so an executor loss recomputes
   instead of failing the job.  Each persisted intermediate is tracked
@@ -247,11 +247,11 @@ def minhash_signatures(
     stream ×k and shuffling one signature row per document.
     """
     # Inline shingles (not staged_gram_arrays): this path explodes the
-    # grams immediately, and the round-4 A/B (tools/ab_dedup.py) has
-    # the inline form ~2× faster at sf0.1 — the staged projection
-    # boundary costs more than the repeated split it avoids on
-    # explode-next pipelines.  Staging stays load-bearing only where
-    # the gram ARRAY itself is consumed (textstats.repetition_stats).
+    # grams immediately, and the round-4 A/B (tools/ab_dedup.py at
+    # commit a2c6231) has the inline form ~2× faster at sf0.1 — the
+    # staged projection boundary costs more than the repeated split it
+    # avoids on explode-next pipelines.  Staging stays load-bearing only
+    # where the gram ARRAY itself is consumed (textstats.repetition_stats).
     #
     # Generated-width expressions (shingle transform, k seed mins) are
     # built as SQL strings parsed JVM-side: O(1) py4j round-trips
@@ -564,7 +564,7 @@ def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # 16-bit fields, so the aggregate is 8 long sums + a count instead
     # of 32 conditional ±1 sums — 4× smaller partial-agg rows on the
     # shuffle and a 4× narrower codegen'd aggregate (A/B at sf0.1:
-    # 0.53s vs 0.75s cold, tools/ab_simhash.py).
+    # 0.53s vs 0.75s cold, tools/ab_simhash.py at commit a2c6231).
     # Validity bound: n_tokens < 2^15.  Below it no field can carry
     # into its neighbor (needs 2^16) and the top field × 2^48 cannot
     # overflow the long (needs 2^15).  At/over it the signature is a
@@ -1181,8 +1181,8 @@ def scrub_dup_passages(
 
 def _lsh_adaptive_bits_col(n_col, n0: int, min_bits: int, max_bits: int):
     """The ``max(min_bits, ceil(log2(n/n0)))`` bit schedule
-    (tools/scale_probe.py:_bits_for — expected bucket size ~n0) as an
-    exact integer column expression, capped at ``max_bits``:
+    (tools/scale_probe.py:_bits_for at commit a2c6231 — expected bucket
+    size ~n0) as an exact integer column expression, capped at ``max_bits``:
     ``ceil(log2(x))`` for x ≥ 2 is the bin-string length of x−1, and
     the min_bits floor absorbs the degenerate small-x cases.  The
     identical arithmetic replays in the SQL oracle, so the schedule
@@ -1310,8 +1310,8 @@ def embedding_lsh_occupancy(
     the max and mean occupancy, and the candidate-pair volume
     Σ s·(s−1)/2 the exact-cosine verify stage would pay.  This is the
     measured check that the log2(n/25) bit-growth schedule
-    (tools/scale_probe.py:_bits_for) actually holds expected bucket
-    size — and so per-bucket quadratic verify work — constant as the
+    (tools/scale_probe.py:_bits_for at commit a2c6231) actually holds
+    expected bucket size — and so per-bucket quadratic verify work — constant as the
     corpus grows; a drifting max_bucket or super-linear n_cand_pairs
     at a larger factor is the loud signal to add bits or valve.
     ``adaptive_bits`` mirrors :func:`embedding_cosine_pairs_lsh`'s

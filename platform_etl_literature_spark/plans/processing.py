@@ -27,23 +27,16 @@ def section_rank_table(spark: SparkSession) -> DataFrame:
     )
 
 
-def filter_matches(df: DataFrame, is_mapped: bool = True) -> DataFrame:
-    """Flatten the match struct, keep (un)mapped rows
+def filter_matches(df: DataFrame) -> DataFrame:
+    """Flatten the match struct, keep mapped rows
     (Processing.filterMatches:41-51)."""
-    return df.select("*", "match.*").drop("match").filter(F.col("isMapped") == is_mapped)
+    return df.select("*", "match.*").drop("match").filter(F.col("isMapped"))
 
 
-def filter_cooccurrences(df: DataFrame, is_mapped: bool = True) -> DataFrame:
-    """Flatten the co-occurrence struct (Processing.filterCooccurrences:28-39).
-
-    The hyphenated source column requires backtick quoting in SQL; the
-    DataFrame API addresses it directly.
-    """
-    return (
-        df.select("*", F.col("`co-occurrence`.*"))
-        .drop("co-occurrence")
-        .filter(F.col("isMapped") == is_mapped)
-    )
+def filter_cooccurrences(df: DataFrame) -> DataFrame:
+    """Flatten the co-occurrence struct (its hyphenated name needs
+    backticks), keep mapped rows (Processing.filterCooccurrences:28-39)."""
+    return df.select("*", "`co-occurrence`.*").drop("co-occurrence").filter(F.col("isMapped"))
 
 
 def literature_index(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -163,8 +156,8 @@ def run(
     for name in ("matches", "cooccurrences"):
         g[name].persist(StorageLevel.DISK_ONLY)
 
-    matches = filter_matches(g["matches"], is_mapped=True)
-    coocs = filter_cooccurrences(g["cooccurrences"], is_mapped=True)
+    matches = filter_matches(g["matches"])
+    coocs = filter_cooccurrences(g["cooccurrences"])
     return {
         "failedMatches": g["matchesFailed"],
         "failedCooccurrences": g["cooccurrencesFailed"],

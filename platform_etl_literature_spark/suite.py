@@ -11544,7 +11544,7 @@ _SUITE_DEFS: dict[str, QuerySpec] = {
 # independently driver-hashed — six swaps; every displaced row was
 # hashed green by the driver in r7 AND r8, is within-family
 # redundant in the window, and stays value-gated in the parity suite
-# (most also stay raced in bench.py):
+# (most were also raced in bench.py, last in commit a2c6231):
 #   edit_distance_join→jaro_winkler_join — same vocabulary-linkage
 #     family (block/neighborhood candidates + exact verify); JW adds
 #     the two claim shapes the window lacks: a python-kernel verify

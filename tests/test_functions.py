@@ -1,5 +1,6 @@
 """Unit tests for the column-level primitives (harmonic fold, vector
-math) against hand-computed values and hypothesis properties."""
+math, grounding keys) against hand-computed values and hypothesis
+properties."""
 
 from __future__ import annotations
 
@@ -14,6 +15,10 @@ from platform_etl_literature_spark.functions import (
     harmonic_sorted,
     harmonic_value,
     max_harmonic,
+)
+from platform_etl_literature_spark.functions.text import (
+    normalise_sentence,
+    with_keys_column,
 )
 
 
@@ -84,3 +89,31 @@ def test_math_identity_against_python():
     vals = [9.0, 7.0, 5.0, 1.0]
     expected = sum(v / (i + 1) ** 2 for i, v in enumerate(sorted(vals, reverse=True)))
     assert expected == pytest.approx(9.0 + 7.0 / 4 + 5.0 / 9 + 1.0 / 16)
+
+
+def test_grounding_keys_case_punctuation_stopwords_stems(spark):
+    # LT splits on - / too, drops the capitalised stopword "Aren't",
+    # stems, and keys on the sorted distinct tokens; TT keeps token
+    # order and only strips punctuation.  "cell-running" and "Running
+    # Cells" share an LT key: the collision the stemmer creates.
+    texts = ["Aren't BRCA-1/alpha: x,y;z", "Running Cells", "cell-running"]
+    df = spark.createDataFrame(
+        [(t, k) for t in texts for k in ("TT", "LT")], "text STRING, keyType STRING"
+    )
+    rows = with_keys_column(normalise_sentence(df, "text", "k"), "k", "key").collect()
+    keys = {(r.text, r.keyType): r.key for r in rows}
+    tokens = {r.text: (r.k_TT, r.k_LT) for r in rows}
+
+    assert keys == {
+        ("Aren't BRCA-1/alpha: x,y;z", "TT"): "arentbrca1alphaxyz",
+        ("Aren't BRCA-1/alpha: x,y;z", "LT"): "1alphabrcaxyz",
+        ("Running Cells", "TT"): "runningcells",
+        ("Running Cells", "LT"): "cellrun",
+        ("cell-running", "TT"): "cellrunning",
+        ("cell-running", "LT"): "cellrun",
+    }
+    assert tokens["Aren't BRCA-1/alpha: x,y;z"] == (
+        ["arent", "brca1alpha", "x", "y", "z"],
+        ["brca", "1", "alpha", "x", "y", "z"],
+    )
+    assert tokens["Running Cells"][1] == ["run", "cell"]

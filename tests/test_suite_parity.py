@@ -18,24 +18,6 @@ def duck(sf_dir):
     return con
 
 
-def test_bench_duckdb_overrides_match_suite_oracles(duck):
-    """bench.py's DUCKDB_OVERRIDE SQL (the algorithm-for-algorithm race
-    used for headline timings) must compute the SAME answer as the
-    suite's ground-truth oracle — otherwise any drift in threshold,
-    prefix formula, or tokenization would make the bench silently time
-    a different computation (round-5 ADVICE)."""
-    from bench import DUCKDB_OVERRIDE
-
-    for name, override_sql in DUCKDB_OVERRIDE.items():
-        spec = SUITE[name]
-        assert spec.oracle is not None, name
-        a = duck.execute(spec.oracle).fetchdf()
-        b = duck.execute(override_sql).fetchdf()
-        assert len(a) == len(b), f"{name}: rowcount {len(a)} != {len(b)}"
-        assert sorted(a.columns) == sorted(b.columns), name
-        assert canon(a) == canon(b), name
-
-
 @pytest.mark.parametrize("name", list(SUITE))
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     spec = SUITE[name]
